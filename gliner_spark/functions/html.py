@@ -56,12 +56,6 @@ _ENTITIES = (
 )
 
 
-def html_decode(html: Column) -> Column:
-    """UTF-8 decode a ``binary`` html column (pass-through shim so
-    callers can hand either the raw binary column or a string)."""
-    return F.decode(html, "UTF-8")
-
-
 def _strip_markup(t: Column) -> Column:
     t = F.regexp_replace(t, _COMMENT, "")
     t = F.regexp_replace(t, _SCRIPT, "")

@@ -1,15 +1,30 @@
-"""End-to-end inference pipeline (per-document kernel).
+"""End-to-end inference pipeline (the kernel inside every Arrow batch).
 
-This is the body that runs inside every Arrow batch on executors — the
-direct analog of the reference's ``inference`` flow
-(gliner/model.py:1384-1491) and the relex flow
-(gliner/model.py:2404-2613):
+One batch loop runs the reference's ``inference`` flow
+(gliner/model.py:1384-1491) and its relex flow
+(gliner/model.py:2404-2613) as four stages:
 
-  filter valid text → word tokenize (+offset maps) → truncate to max_len
-  → [prompt construction] → span enumeration → span×label scoring →
-  sigmoid+threshold → greedy overlap resolution → char mapping
-  → (relex: confident-span selection → adjacency → pair scoring →
-     relation decode with the index-alignment quirk)
+  prepare   valid-text filter → word tokenize (+ offset maps) → truncate
+            to max_len; once per document
+  score     per document: span-grid probabilities (L, K, C) in span
+            mode or start/end/inside flags (W, C, 3) in token mode, plus
+            the relex candidates (rel_idx, rel_probs) for triples. Only
+            this stage depends on the backend:
+            * ONNX-session backends score length-sorted sub-batches, one
+              session call each (span, token, relex, token-relex and the
+              bi-encoder graphs); relex runs in-graph;
+            * the deterministic backend scores one document at a time
+              (markerV0 score cache, contextual span modes, or
+              gazetteer-only) and runs the relex tail here: confident
+              spans → adjacency → pattern boosts → pair×relation scores.
+            The gazetteer overlay lifts span-grid scores before the tail.
+  decode    greedy span decode (span grid) or min-rule span assembly
+            (token flags), then relation decode with the reference's
+            pre-/post-greedy index-alignment quirk
+  char-map  word spans → char offsets and relation dicts
+
+A single document is a batch of one. The generative routes reuse
+prepare and score and add only their label-generation step.
 
 Pure Python/numpy — no Spark imports — so the identical code path is
 unit-testable off-cluster and callable from ``mapInPandas``.
@@ -18,21 +33,29 @@ unit-testable off-cluster and callable from ``mapInPandas``.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
 
 import numpy as np
 
 from ..kernel.tokenization import tokenize_with_offsets
 from ..kernel.spans import make_mapping, span_idx_array
-from ..kernel.prompts import build_entity_prompt, build_relex_prompt
 from ..kernel.decoding import (
-    Span,
+    decode_candidate_span_probs,
     decode_relations,
     decode_span_probs,
+    decode_token_scores,
+    extract_spans_from_token_probs,
     sigmoid,
 )
 from ..kernel.charmap import format_relations, map_spans_to_char
 from .encoder import DeterministicEncoder, get_encoder
+from .generative import (
+    GenerativeLabelDecoder,
+    LabelTokenizer,
+    build_span_label_map,
+    updated_id_to_classes,
+)
+
 
 
 @dataclass
@@ -80,11 +103,32 @@ class PipelineConfig:
     # (relations_layers.py:315-406). Default preserves the bit-exact
     # pre-round-2 bilinear scores.
     relations_mode: str = "bilinear"
-    # Documents per model forward on the batched path (the reference's
-    # inference DataLoader default, gliner/model.py:1391). Only the
-    # ONNX-session backend truly batches; the deterministic analog is
-    # per-document either way.
+    # Documents per model forward (the reference's inference DataLoader
+    # default, gliner/model.py:1391). Only ONNX-session backends score a
+    # whole sub-batch per call; the deterministic backend scores one
+    # document at a time either way.
     batch_size: int = 8
+
+
+
+class _Doc(NamedTuple):
+    """One prepared document (tokens second: ``_session_chunks`` sizes
+    chunks by ``prepared[j][1]``)."""
+
+    i: int  # position in the caller's batch
+    tokens: List[str]
+    starts: List[int]
+    ends: List[int]
+    text: str
+
+
+# session-graph method per (token mode, triples)
+_SESSION_CALLS = {
+    (False, False): "span_probs",
+    (True, False): "token_probs",
+    (False, True): "relex_outputs",
+    (True, True): "token_relex_outputs",
+}
 
 
 class GLiNERPipeline:
@@ -143,6 +187,10 @@ class GLiNERPipeline:
             (h, r, t) for (h, r, t) in (patterns or []) if r in self.relations
         }
         self._label_pos = {lab: i for i, lab in enumerate(self.labels)}
+        # relation → rel_probs column for the pattern boosts (every kept
+        # pattern names a known relation)
+        self._rel_pos = {r: c for c, r in enumerate(self.relations)}
+        self._gen_decoders: Dict[tuple, Any] = {}
         # inference packing (reference model.py:217-227): None = fixed
         # batch_size sub-batches; a config switches the session path to
         # token-budget batching (see _session_chunks)
@@ -267,84 +315,138 @@ class GLiNERPipeline:
         if chunk:
             yield chunk
 
+    # ------------------------------------------------------------------
+    # stage 1: prepare
     def _prepare(self, text: str, lang: str):
-        """Tokenize, truncate, build offset maps (model.py:1181-1208 +
-        truncation processor.py:489-493)."""
+        """Valid-text filter (_filter_valid_texts, model.py:1222-1241),
+        tokenize + offset maps (model.py:1181-1208), truncate
+        (processor.py:489-493). Invalid text yields no tokens."""
+        if not isinstance(text, str) or not text.strip():
+            return [], [], []
         tokens, starts, ends = tokenize_with_offsets(text, lang)
-        if len(tokens) > self.config.max_len:
-            tokens = tokens[: self.config.max_len]
-            starts = starts[: self.config.max_len]
-            ends = ends[: self.config.max_len]
+        m = self.config.max_len
+        if len(tokens) > m:
+            return tokens[:m], starts[:m], ends[:m]
         return tokens, starts, ends
 
-    def _score_spans(self, tokens: Sequence[str]) -> Tuple[np.ndarray, np.ndarray]:
-        """Enumerate spans and score them against label embeddings.
+    def _prepared(self, texts, langs) -> Iterator[_Doc]:
+        """Documents that survive ``_prepare``, lazily, in input order."""
+        if langs is None:
+            langs = ["en"] * len(texts)
+        for i, (text, lang) in enumerate(zip(texts, langs)):
+            tokens, starts, ends = self._prepare(text, lang or "en")
+            if tokens:
+                yield _Doc(i, tokens, starts, ends, text)
 
-        Returns (probs (L,K,C), span_reps (L*K, D)). The prompt tokens
-        <<ENT>>/<<SEP>> are constructed (for structural parity with
-        processor.py:179-197) but the deterministic encoder consumes the
-        precomputed label embeddings directly — the bi-encoder dataflow.
+    # ------------------------------------------------------------------
+    # stage 2: score
+    def _score(self, docs, triples: bool, thr: float):
+        """Yield ``(doc, probs, span_reps, rel)`` per prepared document.
+
+        ``probs`` is the span grid (L, K, C) in span mode and the
+        start/end/inside flags (W, C, 3) in token mode; ``rel`` is
+        ``(rel_idx, rel_probs)`` for triples (either may be None) and
+        None otherwise; ``span_reps`` is the deterministic backend's
+        full span-rep matrix when it has one (contextual span modes,
+        gazetteer-only scoring), else None.
         """
-        L = len(tokens)
-        K = self.config.max_width
-        if self.is_session_backend and self.config.scoring != "gazetteer":
-            # ONNX route: prompt construction, subword tokenization,
-            # word masks and the span grid all happen inside
-            # build_span_feed; logits come back (L, K, C). Bi-encoder
-            # graphs additionally take the precomputed label matrix.
-            if getattr(self.encoder, "accepts_label_embeddings", False):
-                probs = self.encoder.span_probs(
-                    [tokens], self.labels, label_embeddings=self.label_embs
-                )[0]
-            else:
-                probs = self.encoder.span_probs([tokens], self.labels)[0]
-            return probs, np.zeros((L * K, 0))
-        # Structural parity: the prompt exists on the real-model path.
-        _prompted, _plen = build_entity_prompt(tokens, self.labels)
-        sidx = span_idx_array(L, K)
-        if self.config.scoring == "gazetteer":
+        token = self.config.mode == "token"
+        if self.is_session_backend and (token or self.config.scoring != "gazetteer"):
+            scored = self._session_scores(docs, triples, token)
+        else:
+            scored = ((d, *self._score_doc(d.tokens, token), None) for d in docs)
+        for doc, probs, span_reps, rel in scored:
+            if not token:
+                probs = self._apply_gazetteer(probs, doc.text, doc.starts, doc.ends)
+            if triples and rel is None:
+                rel = self._relex_tail(doc.tokens, probs, span_reps, token, thr)
+            yield doc, probs, span_reps, rel
+
+    def _session_scores(self, docs, triples: bool, token: bool):
+        """ONNX-session scoring: one session call per length-sorted
+        sub-batch (the ``_process_batches`` analog, gliner/model.py:
+        1333-1381; see ``_session_chunks``). Relex graphs run confident-
+        span selection, adjacency and pair scoring in-graph at the
+        export-default thresholds (gliner/model.py:2871-2900, token
+        relex 2916-2952) — only decoding is left to us."""
+        docs = list(docs)
+        if not docs:
+            return
+        enc = self.encoder
+        name = _SESSION_CALLS[token, triples]
+        if not hasattr(enc, name):
+            raise ValueError(
+                f"{'triples' if triples else 'entities'} in "
+                f"{'token' if token else 'span'} mode need a session graph "
+                f"with {name} outputs; {type(enc).__name__} has none — export "
+                "the token-mode graph (gliner/model.py:1941-1989) or the "
+                "token-relex graph (gliner/model.py:2916-2952)"
+            )
+        run = getattr(enc, name)
+        if triples:
+            args, kw = (self.labels, self.relations), {}
+        else:
+            args = (self.labels,)
+            # bi-encoder graphs take the precomputed label matrix
+            # (model.py:1746, BiEncoderTokenGLiNER model.py:2033-2070)
+            kw = (
+                {"label_embeddings": self.label_embs}
+                if getattr(enc, "accepts_label_embeddings", False)
+                else {}
+            )
+        order = sorted(range(len(docs)), key=lambda j: -len(docs[j].tokens))
+        for idx_chunk in self._session_chunks(order, docs):
+            chunk = [docs[j] for j in idx_chunk]
+            for doc, out in zip(chunk, run([d.tokens for d in chunk], *args, **kw)):
+                if triples:
+                    probs, rel_idx, rel_probs = out
+                    yield doc, probs, None, (rel_idx, rel_probs)
+                else:
+                    yield doc, out, None, None
+
+    def _score_doc(self, tokens: Sequence[str], token: bool):
+        """Deterministic scoring of one document: ``(probs, span_reps)``.
+
+        The deterministic encoder consumes the precomputed label
+        embeddings directly — the bi-encoder dataflow; the ``<<ENT>>``
+        prompt only exists on the ONNX feed (onnx_backend.build_span_feed).
+        """
+        enc, cfg = self.encoder, self.config
+        if token:
+            logits = enc.token_label_scores(enc.embed_tokens(tokens), self.label_embs)
+            return sigmoid(logits), None  # (W, C, 3)
+        L, K, C = len(tokens), cfg.max_width, len(self.labels)
+        if cfg.scoring == "gazetteer":
             # Dictionary-only mode: no encoder scores; spans light up via
             # _apply_gazetteer alone. Reps stay zero (relex patterns
             # drive adjacency in this mode).
-            return (
-                np.zeros((L, K, len(self.labels))),
-                np.zeros((L * K, self.config.dim)),
-            )
-        cfg = self.config
-        label_embs = self.label_embs
+            return np.zeros((L, K, C)), np.zeros((L * K, cfg.dim))
+        sidx = span_idx_array(L, K)
         contextual = (
             cfg.span_mode != "markerV0"
             or cfg.num_rnn_layers > 0
             or bool(cfg.post_fusion_schema)
         )
-        if contextual:
-            # contextual paths (alt span modes, M4 RNN smoothing, M9
-            # cross-fusion) depend on the whole token sequence →
-            # per-document compute, no pair cache
-            h = self.encoder.embed_tokens(tokens)
-            if cfg.num_rnn_layers > 0:
-                h = self.encoder.rnn_smooth(h, cfg.num_rnn_layers)
-            if cfg.post_fusion_schema:
-                label_embs, h = self.encoder.cross_fuse(
-                    label_embs, h, cfg.post_fusion_schema
-                )
-            span_reps = self.encoder.span_representations_mode(
-                h, sidx, K, cfg.span_mode
-            )
-        else:
+        if not contextual:
             # token-pair-keyed SCORE cache (Zipf vocabularies repeat
             # pairs heavily): a hit skips both the rep gather and the
             # score einsum; bit-identical to the uncached path. Span
-            # reps are not materialized here — the relex path builds
+            # reps are not materialized here — the relex tail builds
             # them lazily for the (few) confident spans only.
-            logits = self.encoder.score_spans_tokens(
-                tokens, sidx, label_embs, self._label_key
-            )
-            probs = sigmoid(logits).reshape(L, K, len(self.labels))
-            return probs, None
-        logits = self.encoder.score_spans(span_reps, label_embs)  # (L*K, C)
-        probs = sigmoid(logits).reshape(L, K, len(self.labels))
-        return probs, span_reps
+            logits = enc.score_spans_tokens(tokens, sidx, self.label_embs, self._label_key)
+            return sigmoid(logits).reshape(L, K, C), None
+        # contextual paths (alt span modes, M4 RNN smoothing, M9
+        # cross-fusion) depend on the whole token sequence →
+        # per-document compute, no pair cache
+        label_embs = self.label_embs
+        h = enc.embed_tokens(tokens)
+        if cfg.num_rnn_layers > 0:
+            h = enc.rnn_smooth(h, cfg.num_rnn_layers)
+        if cfg.post_fusion_schema:
+            label_embs, h = enc.cross_fuse(label_embs, h, cfg.post_fusion_schema)
+        span_reps = enc.span_representations_mode(h, sidx, K, cfg.span_mode)
+        logits = enc.score_spans(span_reps, label_embs)  # (L*K, C)
+        return sigmoid(logits).reshape(L, K, C), span_reps
 
     def _apply_gazetteer(
         self,
@@ -380,7 +482,175 @@ class GLiNERPipeline:
                         probs[s, k, pos] = 0.90 + h / 1000.0
         return probs
 
+    @staticmethod
+    def _confident_spans(probs: np.ndarray, n_words: int, thr: float):
+        """Confident-span selection (base.py:2051-2074): the flat-index-
+        ordered packed list of valid spans whose max-class prob > thr.
+        Returns (flat indices, (E, 2) word spans, (E, C) probs)."""
+        L, K, _C = probs.shape
+        flat = probs.reshape(L * K, -1)
+        sidx = span_idx_array(L, K)
+        idx = np.nonzero((flat.max(axis=1) > thr) & (sidx[:, 1] < n_words))[0]
+        return idx, sidx[idx], flat[idx]
+
+    def _relex_tail(self, tokens, probs, span_reps, token: bool, thr: float):
+        """Deterministic joint relex over one document's scores
+        (UniEncoderSpanRelexGLiNER, model.py:2404-2613; token family
+        UniEncoderTokenRelexGLiNER, model.py:2902):
+
+        1. candidate spans — span mode: the confident packed list;
+           token mode: every (start-flag, end-flag) pair of one class
+           whose inside positions are all flagged
+           (extract_spans_from_tokens, modeling/utils.py:299-379);
+        2. adjacency over the candidates (mode-dispatched,
+           relations_layers.py:315-406), then all directed pairs (i, j),
+           i ≠ j, over adjacency_threshold in row-major order
+           (modeling/utils.py:209-296);
+        3. pair×relation scoring (base.py:2243-2246).
+
+        Span mode adds the predicate-pattern boosts on both the
+        adjacency and the relation scores; token-mode candidates carry
+        no labels, so they get none. Returns (rel_idx, rel_probs), both
+        None when no pair survives.
+        """
+        cfg = self.config
+        if self.rel_embs is None or not len(self.rel_embs):
+            return None, None
+        if token:
+            spans = extract_spans_from_token_probs(
+                probs[:, :, 0], probs[:, :, 1], probs[:, :, 2], thr
+            )
+            idx = None
+        else:
+            idx, spans, packed_probs = self._confident_spans(probs, len(tokens), thr)
+        E = len(spans)
+        if E < 2:
+            return None, None
+        if span_reps is None:
+            # build reps ONLY for the candidates (E ≪ L·K); same per-row
+            # math as the full matrix
+            reps = self.encoder.span_representations_tokens(tokens, spans)
+        else:
+            reps = span_reps[idx]
+        adj = self.encoder.adjacency_probs(reps, cfg.relations_mode)
+        boost = not token and bool(self.patterns)
+        if boost:
+            labels = np.array(self.labels)[packed_probs.argmax(axis=1)]
+            # dependency-lite predicate patterns: a typed pair matching
+            # any (head_label, *, tail_label) pattern AND within
+            # max_pattern_distance words is a confident adjacency
+            # candidate. Vectorized over the E×E grid (the reference's
+            # O(E²) Python loop is its bottleneck, modeling/utils.py:
+            # 254-258 — SURVEY.md §4.3); word gap = max(start_j - end_i,
+            # start_i - end_j).
+            st, en = spans[:, 0], spans[:, 1]
+            gap = np.maximum(st[None, :] - en[:, None], st[:, None] - en[None, :])
+            near = gap <= cfg.max_pattern_distance
+            typed = np.zeros((E, E), dtype=bool)
+            for h, _r, t in self.patterns:
+                typed |= (labels[:, None] == h) & (labels[None, :] == t)
+            np.fill_diagonal(typed, False)
+            adj = np.where(typed & near, np.maximum(adj, 0.95), adj)
+        rows, cols = np.nonzero(~np.eye(E, dtype=bool))  # row-major (i, j), i != j
+        adj_thr = cfg.adjacency_threshold if cfg.adjacency_threshold is not None else thr
+        sel = adj[rows, cols] > adj_thr
+        pairs = np.stack([rows[sel], cols[sel]], axis=1)
+        if not len(pairs):
+            return None, None
+        # packed form: span-level projections once, pair-level adds
+        rel_probs = sigmoid(
+            self.encoder.pair_relation_logits_packed(reps, pairs, self.rel_embs)
+        )
+        if boost:
+            hl, tl = labels[pairs[:, 0]], labels[pairs[:, 1]]
+            near = near[pairs[:, 0], pairs[:, 1]]
+            for h, r, t in self.patterns:
+                mask = near & (hl == h) & (tl == t)
+                c = self._rel_pos[r]
+                rel_probs[mask, c] = np.maximum(rel_probs[mask, c], 0.93)
+        return pairs, rel_probs
+
     # ------------------------------------------------------------------
+    # stages 3 + 4: decode, char-map
+    def _decode(
+        self, doc: _Doc, probs, thr, input_spans=None, return_class_probs=False,
+        id_to_class=None,
+    ):
+        """Entity decode + char mapping: ``(spans, entities)``. Span
+        grids decode greedily (decoder.py:222-293); token flags assemble
+        spans with the min-score rule (decoder.py:975-1028)."""
+        cfg = self.config
+        id_to_class = id_to_class or self.id_to_class
+        if cfg.mode == "token":
+            spans = decode_token_scores(
+                probs[:, :, 0],
+                probs[:, :, 1],
+                probs[:, :, 2],
+                id_to_class,
+                threshold=thr,
+                flat_ner=cfg.flat_ner,
+                multi_label=cfg.multi_label,
+                input_spans=input_spans,
+                return_class_probs=return_class_probs,
+            )
+        else:
+            spans = decode_span_probs(
+                probs,
+                doc.tokens,
+                id_to_class,
+                threshold=thr,
+                flat_ner=cfg.flat_ner,
+                multi_label=cfg.multi_label,
+                return_class_probs=return_class_probs,
+                input_spans=input_spans,
+            )
+        return spans, map_spans_to_char(spans, doc.text, doc.starts, doc.ends)
+
+    def _run(
+        self, texts, langs, threshold, triples: bool,
+        input_spans_list=None, return_class_probs=False,
+    ) -> list:
+        """The batch loop every entry point goes through: prepare →
+        score → decode → char-map, results in input order."""
+        cfg = self.config
+        thr = cfg.threshold if threshold is None else threshold
+        rel_thr = cfg.relation_threshold if cfg.relation_threshold is not None else thr
+        results: list = [([], []) if triples else [] for _ in texts]
+        for doc, probs, _reps, rel in self._score(self._prepared(texts, langs), triples, thr):
+            word_spans = (
+                self._to_word_spans(input_spans_list[doc.i], doc.starts, doc.ends)
+                if input_spans_list is not None
+                else None
+            )
+            spans, entities = self._decode(doc, probs, thr, word_spans, return_class_probs)
+            if not triples:
+                results[doc.i] = entities
+                continue
+            # head/tail indices from the PRE-greedy candidate list,
+            # validated against the POST-greedy spans (decoder.py:822)
+            rel_tuples = decode_relations(
+                spans, rel[0], rel[1], None, self.rel_id_to_class, threshold=rel_thr
+            )
+            relations = format_relations(rel_tuples, spans, doc.text, doc.starts, doc.ends)
+            results[doc.i] = (entities, relations)
+        return results
+
+    @staticmethod
+    def _to_word_spans(input_spans, starts, ends):
+        """CHAR spans → WORD spans via exact-boundary reverse maps,
+        silently dropping non-aligned spans (P6, model.py:1243-1279)."""
+        if input_spans is None:
+            return None
+        start_map = {cs: i for i, cs in enumerate(starts)}
+        end_map = {ce: i for i, ce in enumerate(ends)}
+        return [
+            (start_map[cs], end_map[ce])
+            for cs, ce in input_spans
+            if cs in start_map and ce in end_map  # silent drop (P6)
+        ]
+
+    # ------------------------------------------------------------------
+    # entry points
     def predict_entities(
         self,
         text: str,
@@ -396,55 +666,66 @@ class GLiNERPipeline:
         the exact-boundary reverse maps and silently dropped when it
         doesn't align to token boundaries (P6, model.py:1243-1279).
         ``return_class_probs`` attaches the top-k per-class
-        probabilities per span (D4, decoder.py:159-188).
+        probabilities per span (D4, decoder.py:159-188); in token mode
+        these are per-class min-rule span scores.
         """
-        if not isinstance(text, str) or not text.strip():
-            return []  # _filter_valid_texts (model.py:1222-1241)
-        thr = self.config.threshold if threshold is None else threshold
-        tokens, starts, ends = self._prepare(text, lang)
-        if not tokens:
-            return []
-        word_spans = self._to_word_spans(input_spans, starts, ends)
-        if self.config.mode == "token":
-            return self._predict_entities_token(
-                tokens,
-                text,
-                starts,
-                ends,
-                thr,
-                input_spans=word_spans,
-                return_class_probs=return_class_probs,
-            )
-        probs, _ = self._score_spans(tokens)
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-            return_class_probs=return_class_probs,
-            input_spans=word_spans,
+        return self._run(
+            [text], [lang], threshold, False, [input_spans], return_class_probs
+        )[0]
+
+    def predict_entities_batch(
+        self,
+        texts: Sequence[str],
+        langs: Optional[Sequence[str]] = None,
+        threshold: Optional[float] = None,
+        input_spans_list: Optional[Sequence] = None,
+        return_class_probs: bool = False,
+    ) -> List[List[Dict[str, Any]]]:
+        """Batched prediction — the ``_process_batches`` analog
+        (gliner/model.py:1333-1381).
+
+        Session (ONNX) backends run ONE ``session.run`` per sub-batch of
+        ``config.batch_size`` documents, with documents length-sorted
+        first so each padded batch is length-homogeneous (the cheap 80%
+        of the reference's packing win, infer_packing.py:164-208; see
+        ``configure_inference_packing`` for token-budget sub-batches).
+        Output order follows the input order and is identical to
+        per-document ``predict_entities`` calls.
+        """
+        return self._run(
+            texts, langs, threshold, False, input_spans_list, return_class_probs
         )
-        return map_spans_to_char(spans, text, starts, ends)
+
+    def predict_triples(
+        self, text: str, lang: str = "en", threshold: Optional[float] = None
+    ) -> Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]:
+        """(entities, relations) for one document — the joint relex
+        route (model.py:2404-2613): scoring, the relex tail
+        (``_relex_tail``, or in-graph on relex session backends), then
+        entity decode and relation decode."""
+        return self._run([text], [lang], threshold, True)[0]
+
+    def predict_triples_batch(
+        self,
+        texts: Sequence[str],
+        langs: Optional[Sequence[str]] = None,
+        threshold: Optional[float] = None,
+    ) -> List[Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]]:
+        """Batched triples — one ``session.run`` per length-sorted
+        sub-batch on relex session backends, per-doc otherwise."""
+        return self._run(texts, langs, threshold, True)
 
     # ------------------------------------------------------------------
     def _generative_decoder(self, constraints):
         """Lazily-built deterministic generative head, cached per
         constraint set (the decoder tokenizer's closed vocabulary is
         labels ∪ constraints)."""
-        from .generative import GenerativeLabelDecoder, LabelTokenizer
-
         key = tuple(constraints or ())
-        cache = getattr(self, "_gen_decoders", None)
-        if cache is None:
-            cache = self._gen_decoders = {}
-        dec = cache.get(key)
+        dec = self._gen_decoders.get(key)
         if dec is None:
             vocab_labels = list(self.labels) + list(constraints or ())
             dec = GenerativeLabelDecoder(self.encoder, LabelTokenizer(vocab_labels))
-            cache[key] = dec
+            self._gen_decoders[key] = dec
         return dec
 
     def predict_entities_generative(
@@ -463,14 +744,24 @@ class GLiNERPipeline:
         ``decoder_mode`` follows config.decoder_mode semantics
         (decoding/decoder.py:403-614):
 
-        * ``"span"``  — confident spans (the select_span_decoder_embedding
-          keep rule, base.py:1356-1374: sigmoid(score).max > threshold,
-          flat L*K packing order) each get ``num_gen_sequences``
+        * ``"span"``  — confident spans each get ``num_gen_sequences``
           generated label strings attached as ``generated_labels``;
         * ``"prompt"`` — one label is generated per PROMPT CLASS from
           its label embedding and REPLACES the class name in
           id_to_classes (decoder.py:415-444); entities carry the
           generated name as their ``label``.
+
+        Span mode keeps the select_span_decoder_embedding rule
+        (base.py:1356-1374: sigmoid(score).max > threshold, flat L*K
+        packing order) and decodes greedily. Token mode is the
+        UniEncoderTokenDecoderGLiNER family (gliner/model.py:2346-2358;
+        base.py:1608-1900; TokenGenerativeDecoder, decoder.py:
+        1427-1533): candidates proposed from the BIO flags are re-scored
+        against the label embeddings (base.py:1836) and decoded over
+        THOSE span probs; the decoder keeps candidates with max prob
+        > 0.5 — the reference HARD-CODES 0.5 (base.py:1700-1702),
+        independent of the user threshold — and labels attach by
+        candidate position (decoder.py:1490-1531).
 
         ``gen_constraints`` builds the labels trie (model.py:2107-2131)
         so every generated string is a member of the constraint set.
@@ -483,680 +774,69 @@ class GLiNERPipeline:
                 "(reference model.py:2322-2345 raises on export); use the "
                 "deterministic bi-encoder backend"
             )
-        if not isinstance(text, str) or not text.strip():
-            return []
         thr = self.config.threshold if threshold is None else threshold
-        tokens, starts, ends = self._prepare(text, lang)
-        if not tokens:
+        scored = list(self._score(self._prepared([text], [lang]), False, thr))
+        if not scored:
             return []
-        if self.config.mode == "token":
-            return self._predict_entities_generative_token(
-                tokens, text, starts, ends, thr,
-                decoder_mode=decoder_mode,
-                gen_constraints=gen_constraints,
-                num_gen_sequences=num_gen_sequences,
-                max_new_tokens=max_new_tokens,
+        doc, probs, span_reps, _ = scored[0]
+        token = self.config.mode == "token"
+        if token:
+            cand = extract_spans_from_token_probs(
+                probs[:, :, 0], probs[:, :, 1], probs[:, :, 2], thr
             )
-        probs, span_reps = self._score_spans(tokens)
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        L, K, _C = probs.shape
+            if len(cand) == 0:
+                return []
+            cand_reps = self.encoder.span_representations_tokens(doc.tokens, cand)
+            cand_probs = sigmoid(self.encoder.score_spans(cand_reps, self.label_embs))
         dec = self._generative_decoder(gen_constraints)
-
-        from .generative import build_span_label_map, updated_id_to_classes
-
+        gen_kw = dict(constraints=gen_constraints, max_new_tokens=max_new_tokens)
         id_to_class = self.id_to_class
         span_label_map: Dict[int, List[str]] = {}
         if decoder_mode == "prompt":
             # decoder input = prompt (class) embeddings, one generated
             # name per class, num_return_sequences=1 (decoder.py:452)
-            gen = dec.generate_labels(
-                self.label_embs,
-                constraints=gen_constraints,
-                num_return_sequences=1,
-                max_new_tokens=max_new_tokens,
-            )
+            gen = dec.generate_labels(self.label_embs, num_return_sequences=1, **gen_kw)
             id_to_class = updated_id_to_classes(self.id_to_class, gen)
         elif decoder_mode == "span":
-            flat_probs = probs.reshape(L * K, -1)
-            sidx = span_idx_array(L, K)
-            valid = sidx[:, 1] < len(tokens)
-            keep = (flat_probs.max(axis=1) > thr) & valid
-            packed_idx = np.nonzero(keep)[0]  # flat packing order
-            if len(packed_idx):
-                if span_reps is None:
-                    packed_reps = self.encoder.span_representations_tokens(
-                        tokens, sidx[packed_idx]
-                    )
+            if token:
+                sel = np.nonzero(cand_probs.max(axis=1) > 0.5)[0]
+            else:
+                sel, spans, _ = self._confident_spans(probs, len(doc.tokens), thr)
+            if len(sel):
+                if token:
+                    sel_reps = cand_reps[sel]
+                elif span_reps is None:
+                    sel_reps = self.encoder.span_representations_tokens(doc.tokens, spans)
                 else:
-                    packed_reps = span_reps[packed_idx]
+                    sel_reps = span_reps[sel]
                 gen = dec.generate_labels(
-                    packed_reps,
-                    constraints=gen_constraints,
-                    num_return_sequences=num_gen_sequences,
-                    max_new_tokens=max_new_tokens,
+                    sel_reps, num_return_sequences=num_gen_sequences, **gen_kw
                 )
-                span_label_map = build_span_label_map(
-                    packed_idx, gen, num_gen_sequences
-                )
+                span_label_map = build_span_label_map(sel, gen, num_gen_sequences)
         else:
             raise ValueError(f"unknown decoder_mode: {decoder_mode!r}")
-
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        if decoder_mode == "span":
+        if token:
+            spans = decode_candidate_span_probs(
+                cand_probs,
+                cand,
+                id_to_class,
+                span_label_map=span_label_map,
+                threshold=thr,
+                flat_ner=self.config.flat_ner,
+                multi_label=self.config.multi_label,
+            )
+            entities = map_spans_to_char(spans, doc.text, doc.starts, doc.ends)
+            labels = [span.generated_labels for span in spans]
+        else:
+            spans, entities = self._decode(doc, probs, thr, id_to_class=id_to_class)
             # flat_idx = start * K + width addresses the pre-greedy
             # packed list (decoder.py:492-527 _build_span_tuple)
-            for span, ent in zip(spans, entities):
-                flat_idx = span.start * K + (span.end - span.start)
-                labels = span_label_map.get(flat_idx)
-                if labels is not None:
-                    ent["generated_labels"] = labels
+            K = probs.shape[1]
+            labels = [
+                span_label_map.get(span.start * K + (span.end - span.start))
+                for span in spans
+            ]
+        for ent, gen_labels in zip(entities, labels):
+            if gen_labels is not None:
+                ent["generated_labels"] = gen_labels
         return entities
-
-    def _predict_entities_generative_token(
-        self,
-        tokens,
-        text,
-        starts,
-        ends,
-        thr,
-        decoder_mode: str = "span",
-        gen_constraints: Optional[Sequence[str]] = None,
-        num_gen_sequences: int = 1,
-        max_new_tokens: int = 15,
-    ) -> List[Dict[str, Any]]:
-        """Token-mode generative family (UniEncoderTokenDecoderGLiNER,
-        gliner/model.py:2346-2358; model side base.py:1608-1900; decode
-        side TokenGenerativeDecoder, decoder.py:1427-1533):
-
-        1. BIO token scoring → (W, C, 3) probs (M7);
-        2. candidate spans proposed FROM the token flags
-           (extract_spans_from_tokens, modeling/utils.py:299-379 — the
-           span grid is never enumerated);
-        3. candidate reps re-scored against the label embeddings
-           (``span_logits = einsum('BND,BCD->BNC')``, base.py:1836) —
-           entity decode in this family runs over THESE span probs,
-           not the BIO min rule;
-        4. decoder input selection keeps candidates with
-           ``sigmoid(span_logits).max(-1) > 0.5`` — the reference
-           HARD-CODES 0.5 here (base.py:1700-1702), independent of the
-           user threshold (upstream also writes ``& span_mask.bool``
-           without calling it — our candidate list is packed so the
-           mask is all-true and the intended semantics are unambiguous);
-        5. ``num_gen_sequences`` labels generate per kept span,
-           attached by CANDIDATE POSITION (decoder.py:1490-1531), then
-           greedy overlap resolution runs over the tuples.
-
-        ``decoder_mode="prompt"`` generates one name per prompt class
-        and substitutes it into id_to_classes (decoder.py:1486-1488) —
-        entities carry the generated name as their ``label``.
-        """
-        from ..kernel.decoding import (
-            decode_candidate_span_probs,
-            extract_spans_from_token_probs,
-        )
-        from .generative import build_span_label_map, updated_id_to_classes
-
-        token_embs = self.encoder.embed_tokens(tokens)
-        logits = self.encoder.token_label_scores(token_embs, self.label_embs)
-        tp = sigmoid(logits)  # (W, C, 3)
-        cand = extract_spans_from_token_probs(
-            tp[:, :, 0], tp[:, :, 1], tp[:, :, 2], thr
-        )
-        if len(cand) == 0:
-            return []
-        cand_reps = self.encoder.span_representations_tokens(tokens, cand)
-        span_probs = sigmoid(
-            self.encoder.score_spans(cand_reps, self.label_embs)
-        )  # (E, C)
-        dec = self._generative_decoder(gen_constraints)
-        id_to_class = self.id_to_class
-        span_label_map: Dict[int, List[str]] = {}
-        if decoder_mode == "prompt":
-            gen = dec.generate_labels(
-                self.label_embs,
-                constraints=gen_constraints,
-                num_return_sequences=1,
-                max_new_tokens=max_new_tokens,
-            )
-            id_to_class = updated_id_to_classes(self.id_to_class, gen)
-        elif decoder_mode == "span":
-            keep = span_probs.max(axis=1) > 0.5  # hard-coded (base.py:1702)
-            sel = np.nonzero(keep)[0]
-            if len(sel):
-                gen = dec.generate_labels(
-                    cand_reps[sel],
-                    constraints=gen_constraints,
-                    num_return_sequences=num_gen_sequences,
-                    max_new_tokens=max_new_tokens,
-                )
-                span_label_map = build_span_label_map(
-                    sel, gen, num_gen_sequences
-                )
-        else:
-            raise ValueError(f"unknown decoder_mode: {decoder_mode!r}")
-        spans = decode_candidate_span_probs(
-            span_probs,
-            cand,
-            id_to_class,
-            span_label_map=span_label_map,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        for span, ent in zip(spans, entities):
-            if span.generated_labels is not None:
-                ent["generated_labels"] = span.generated_labels
-        return entities
-
-    @staticmethod
-    def _to_word_spans(input_spans, starts, ends):
-        """CHAR spans → WORD spans via exact-boundary reverse maps,
-        silently dropping non-aligned spans (P6, model.py:1243-1279)."""
-        if input_spans is None:
-            return None
-        start_map = {cs: i for i, cs in enumerate(starts)}
-        end_map = {ce: i for i, ce in enumerate(ends)}
-        return [
-            (start_map[cs], end_map[ce])
-            for cs, ce in input_spans
-            if cs in start_map and ce in end_map  # silent drop (P6)
-        ]
-
-    def predict_entities_batch(
-        self,
-        texts: Sequence[str],
-        langs: Optional[Sequence[str]] = None,
-        threshold: Optional[float] = None,
-        input_spans_list: Optional[Sequence] = None,
-        return_class_probs: bool = False,
-    ) -> List[List[Dict[str, Any]]]:
-        """Batched prediction — the ``_process_batches`` analog
-        (gliner/model.py:1333-1381).
-
-        Session (ONNX) backends run ONE ``session.run`` per sub-batch of
-        ``config.batch_size`` documents, with documents length-sorted
-        first so each padded batch is length-homogeneous (the cheap 80%
-        of the reference's packing win, infer_packing.py:164-208; see
-        also plans/packing for the full block-diagonal variant). Output
-        order follows the input order and is identical to per-document
-        ``predict_entities`` calls.
-        """
-        n = len(texts)
-        lang_list = list(langs) if langs is not None else ["en"] * n
-        spans_list = (
-            list(input_spans_list) if input_spans_list is not None else [None] * n
-        )
-        batched = (
-            self.is_session_backend
-            and self.config.scoring != "gazetteer"
-            and self.config.mode == "span"
-        )
-        if not batched:
-            return [
-                self.predict_entities(
-                    t,
-                    lg or "en",
-                    threshold=threshold,
-                    input_spans=sp,
-                    return_class_probs=return_class_probs,
-                )
-                for t, lg, sp in zip(texts, lang_list, spans_list)
-            ]
-        thr = self.config.threshold if threshold is None else threshold
-        prepared = []  # (orig_idx, tokens, starts, ends)
-        for i, (t, lg) in enumerate(zip(texts, lang_list)):
-            if isinstance(t, str) and t.strip():
-                tokens, starts, ends = self._prepare(t, lg or "en")
-                if tokens:
-                    prepared.append((i, tokens, starts, ends))
-        results: List[List[Dict[str, Any]]] = [[] for _ in range(n)]
-        order = sorted(range(len(prepared)), key=lambda j: -len(prepared[j][1]))
-        for idx_chunk in self._session_chunks(order, prepared):
-            chunk = [prepared[j] for j in idx_chunk]
-            if getattr(self.encoder, "accepts_label_embeddings", False):
-                probs_list = self.encoder.span_probs(
-                    [c[1] for c in chunk], self.labels,
-                    label_embeddings=self.label_embs,
-                )
-            else:
-                probs_list = self.encoder.span_probs(
-                    [c[1] for c in chunk], self.labels
-                )
-            for (i, tokens, starts, ends), probs in zip(chunk, probs_list):
-                text = texts[i]
-                probs = self._apply_gazetteer(probs, text, starts, ends)
-                spans = decode_span_probs(
-                    probs,
-                    tokens,
-                    self.id_to_class,
-                    threshold=thr,
-                    flat_ner=self.config.flat_ner,
-                    multi_label=self.config.multi_label,
-                    return_class_probs=return_class_probs,
-                    input_spans=self._to_word_spans(spans_list[i], starts, ends),
-                )
-                results[i] = map_spans_to_char(spans, text, starts, ends)
-        return results
-
-    def _predict_entities_token(
-        self,
-        tokens,
-        text,
-        starts,
-        ends,
-        thr,
-        input_spans=None,
-        return_class_probs=False,
-    ):
-        """Token-mode path: (W,C,3) start/end/inside probabilities →
-        span assembly with the min-score rule (decoder.py:975-1028).
-
-        ``input_spans`` are WORD spans (already converted by the caller)
-        and restrict decoding exactly like span mode (D9).
-        ``return_class_probs`` attaches per-class min-rule span scores —
-        the token-mode analog of D4 (the reference's TokenDecoder has no
-        top-k path of its own; this extends the contract uniformly).
-        """
-        from ..kernel.decoding import decode_token_scores
-
-        if hasattr(self.encoder, "token_probs"):
-            # token-mode ONNX graph (OnnxTokenEncoder): (W, C, 3) probs;
-            # bi-encoder token graphs additionally ride the precomputed
-            # label matrix (BiEncoderTokenGLiNER, model.py:2033-2070)
-            if getattr(self.encoder, "accepts_label_embeddings", False):
-                probs = self.encoder.token_probs(
-                    [tokens], self.labels, label_embeddings=self.label_embs
-                )[0]
-            else:
-                probs = self.encoder.token_probs([tokens], self.labels)[0]
-        elif not hasattr(self.encoder, "token_label_scores"):
-            raise ValueError(
-                "token mode needs a token-scoring backend (DeterministicEncoder "
-                "or OnnxTokenEncoder); a span-mode ONNX session cannot produce "
-                "(W,C,3) start/end/inside scores — export the token-mode graph "
-                "(gliner/model.py:1941-1989)"
-            )
-        else:
-            token_embs = self.encoder.embed_tokens(tokens)
-            logits = self.encoder.token_label_scores(token_embs, self.label_embs)
-            probs = sigmoid(logits)  # (W, C, 3)
-        spans = decode_token_scores(
-            probs[:, :, 0],
-            probs[:, :, 1],
-            probs[:, :, 2],
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-            input_spans=input_spans,
-            return_class_probs=return_class_probs,
-        )
-        return map_spans_to_char(spans, text, starts, ends)
-
-    # ------------------------------------------------------------------
-    def predict_triples(
-        self, text: str, lang: str = "en", threshold: Optional[float] = None
-    ) -> Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]:
-        """(entities, relations) for one document.
-
-        Mirrors UniEncoderSpanRelexGLiNER.inference (model.py:2404-2613):
-
-        1. span scoring as in entity mode;
-        2. confident-span selection: flat-index-ordered packed list of
-           valid spans whose max-class prob > threshold
-           (base.py:2051-2074);
-        3. bilinear adjacency over the packed list, sigmoid, then all
-           directed pairs (i,j), i≠j, with prob > adjacency_threshold,
-           in row-major order (modeling/utils.py:209-296);
-        4. pair×relation scoring (base.py:2243-2246);
-        5. entity decode (greedy) + relation decode — head/tail indices
-           from the PRE-greedy packed list validated against the
-           POST-greedy span list (decoder.py:822), ported verbatim.
-        """
-        if not isinstance(text, str) or not text.strip():
-            return [], []
-        cfg = self.config
-        thr = cfg.threshold if threshold is None else threshold
-        adj_thr = cfg.adjacency_threshold if cfg.adjacency_threshold is not None else thr
-        rel_thr = cfg.relation_threshold if cfg.relation_threshold is not None else thr
-
-        tokens, starts, ends = self._prepare(text, lang)
-        if not tokens:
-            return [], []
-        if cfg.mode == "token":
-            # token-mode joint relex (UniEncoderTokenRelexGLiNER,
-            # gliner/model.py:2902): BIO token scoring proposes the
-            # candidate-span list, the relex tail runs over it
-            if self.is_session_backend:
-                return self._predict_triples_token_session(
-                    tokens, text, starts, ends, thr, rel_thr
-                )
-            return self._predict_triples_token(
-                tokens, text, starts, ends, thr, adj_thr, rel_thr
-            )
-        if self.is_session_backend and self.config.scoring != "gazetteer":
-            return self._predict_triples_session(
-                tokens, text, starts, ends, thr, rel_thr
-            )
-        _prompted, _plen = build_relex_prompt(tokens, self.labels, self.relations)
-
-        probs, span_reps = self._score_spans(tokens)
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        L, K, _ = probs.shape
-
-        # --- step 2: confident-span selection (flat index order) ---
-        flat_probs = probs.reshape(L * K, -1)
-        sidx = span_idx_array(L, K)
-        valid = sidx[:, 1] < len(tokens)  # span_mask
-        keep = (flat_probs.max(axis=1) > thr) & valid
-        packed_idx = np.nonzero(keep)[0]  # ascending flat order = packed order
-        if span_reps is None:
-            # score-cache path: build reps ONLY for the confident spans
-            # (E ≪ L·K); same per-row math as the full matrix
-            packed_reps = self.encoder.span_representations_tokens(
-                tokens, sidx[packed_idx]
-            )
-        else:
-            packed_reps = span_reps[packed_idx]
-        E = len(packed_idx)
-
-        rel_idx = None
-        rel_probs = None
-        if E >= 2 and self.rel_embs is not None and len(self.rel_embs):
-            # argmax entity label per packed span (for predicate patterns)
-            packed_labels = [
-                self.labels[int(c)] for c in flat_probs[packed_idx].argmax(axis=1)
-            ]
-            # --- step 3: adjacency + directed pairs (mode-dispatched,
-            # relations_layers.py:315-406; bilinear = default) ---
-            adj = self.encoder.adjacency_probs(packed_reps, self.config.relations_mode)
-            packed_spans = sidx[packed_idx]  # (E, 2) word positions
-            # Vectorized word-gap matrix (shared by adjacency + rel
-            # boosts): gap[i,j] = max(start_j - end_i, start_i - end_j).
-            st, en = packed_spans[:, 0], packed_spans[:, 1]
-            gap_mat = np.maximum(st[None, :] - en[:, None], st[:, None] - en[None, :])
-            lab_arr = np.array(packed_labels)
-            if self.patterns:
-                # dependency-lite predicate patterns: a typed pair that
-                # matches any (head_label, *, tail_label) pattern AND sits
-                # within max_pattern_distance words is a confident
-                # adjacency candidate. Vectorized over the E×E grid
-                # (the reference's O(E²) Python loop is its bottleneck,
-                # modeling/utils.py:254-258 — SURVEY.md §4.3).
-                maxd = self.config.max_pattern_distance
-                typed = np.zeros((E, E), dtype=bool)
-                for h, _r, t in self.patterns:
-                    typed |= (lab_arr[:, None] == h) & (lab_arr[None, :] == t)
-                np.fill_diagonal(typed, False)
-                boost = typed & (gap_mat <= maxd)
-                adj = np.where(boost, np.maximum(adj, 0.95), adj)
-            rows, cols = np.nonzero(~np.eye(E, dtype=bool))  # row-major (i, j), i != j
-            sel = adj[rows, cols] > adj_thr
-            pairs = np.stack([rows[sel], cols[sel]], axis=1)
-            if len(pairs):
-                # --- step 4: pair×relation scoring (packed form:
-                # span-level projections once, pair-level adds) ---
-                rel_logits = self.encoder.pair_relation_logits_packed(
-                    packed_reps, pairs, self.rel_embs
-                )
-                rel_idx = pairs
-                rel_probs = sigmoid(rel_logits)
-                if self.patterns:
-                    maxd = self.config.max_pattern_distance
-                    hl = lab_arr[pairs[:, 0]]
-                    tl = lab_arr[pairs[:, 1]]
-                    near = gap_mat[pairs[:, 0], pairs[:, 1]] <= maxd
-                    rel_pos = {r: c for c, r in enumerate(self.relations)}
-                    for h, r, t in self.patterns:
-                        c = rel_pos.get(r)
-                        if c is None:
-                            # pattern names an unknown relation: ignore
-                            # (matches the pre-vectorization behavior —
-                            # never KeyError inside the executor UDF)
-                            continue
-                        mask = near & (hl == h) & (tl == t)
-                        rel_probs[mask, c] = np.maximum(rel_probs[mask, c], 0.93)
-
-        # --- step 5: decode ---
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=cfg.flat_ner,
-            multi_label=cfg.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def _predict_triples_session(self, tokens, text, starts, ends, thr, rel_thr):
-        """ONNX relex route: the graph itself runs confident-span
-        selection, adjacency and pair scoring (export wrapper,
-        gliner/model.py:2871-2900); here we only decode its four
-        outputs, preserving the pre-greedy/post-greedy index-alignment
-        quirk (decoder.py:822). The in-graph selection threshold is the
-        export default (the exported forward signature takes no
-        threshold input), matching the reference's ONNX reality.
-        """
-        probs, rel_idx, rel_probs = self.encoder.relex_outputs(
-            [tokens], self.labels, self.relations
-        )[0]
-        probs = self._apply_gazetteer(probs, text, starts, ends)
-        spans = decode_span_probs(
-            probs,
-            tokens,
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def _predict_triples_token(
-        self, tokens, text, starts, ends, thr, adj_thr, rel_thr
-    ):
-        """Token-mode joint relex, deterministic-analog backend
-        (UniEncoderTokenRelexGLiNER, gliner/model.py:2902).
-
-        1. BIO token scoring → (W, C, 3) start/end/inside probs (M7);
-        2. candidate-span proposal from the BIO flags — NOT the L×K
-           enumeration grid (extract_spans_from_tokens,
-           modeling/utils.py:299-379 via the represent_spans override,
-           base.py:2497-2514): every (start-flag, end-flag) pair of one
-           class whose inside positions are all flagged;
-        3. the SPAN-relex tail over the candidate list: adjacency +
-           all directed pairs over adjacency_threshold in row-major
-           order + pair×relation scoring (base.py:2216-2256);
-        4. TokenRelexDecoder.decode (decoding/decoder.py:1325-1427):
-           entity assembly with the BIO min rule, then relation decode
-           validating rel_idx — candidate-list indices — against the
-           POST-greedy span list by bounds check only (the same
-           index-alignment quirk as span mode, decoder.py:1305-1310).
-        """
-        from ..kernel.decoding import (
-            decode_token_scores,
-            extract_spans_from_token_probs,
-        )
-
-        cfg = self.config
-        token_embs = self.encoder.embed_tokens(tokens)
-        logits = self.encoder.token_label_scores(token_embs, self.label_embs)
-        probs = sigmoid(logits)  # (W, C, 3)
-        cand = extract_spans_from_token_probs(
-            probs[:, :, 0], probs[:, :, 1], probs[:, :, 2], thr
-        )
-        rel_idx = None
-        rel_probs = None
-        if len(cand) >= 2 and self.rel_embs is not None and len(self.rel_embs):
-            cand_reps = self.encoder.span_representations_tokens(tokens, cand)
-            adj = self.encoder.adjacency_probs(cand_reps, cfg.relations_mode)
-            E = len(cand)
-            rows, cols = np.nonzero(~np.eye(E, dtype=bool))  # row-major (i, j)
-            sel = adj[rows, cols] > adj_thr
-            pairs = np.stack([rows[sel], cols[sel]], axis=1)
-            if len(pairs):
-                rel_logits = self.encoder.pair_relation_logits_packed(
-                    cand_reps, pairs, self.rel_embs
-                )
-                rel_idx = pairs
-                rel_probs = sigmoid(rel_logits)
-        spans = decode_token_scores(
-            probs[:, :, 0],
-            probs[:, :, 1],
-            probs[:, :, 2],
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=cfg.flat_ner,
-            multi_label=cfg.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def _predict_triples_token_session(
-        self, tokens, text, starts, ends, thr, rel_thr
-    ):
-        """Token-relex ONNX route: the exported graph emits
-        logits/rel_idx/rel_logits/rel_mask with NO span grid in the
-        declared inputs (UniEncoderTokenRelexGLiNER._get_onnx_input_spec,
-        gliner/model.py:2916-2952); candidate proposal, adjacency and
-        pair scoring run IN-GRAPH at the export-default thresholds.
-        Here we only decode the four outputs (TokenRelexDecoder
-        semantics, incl. the index-alignment quirk)."""
-        from ..kernel.decoding import decode_token_scores
-
-        if not hasattr(self.encoder, "token_relex_outputs"):
-            raise ValueError(
-                "token-mode triples on a session backend need a token-relex "
-                "graph (logits/rel_idx/rel_logits/rel_mask, no span grid — "
-                "gliner/model.py:2916-2952); this session exports "
-                f"{type(self.encoder).__name__} outputs only"
-            )
-        probs, rel_idx, rel_probs = self.encoder.token_relex_outputs(
-            [tokens], self.labels, self.relations
-        )[0]
-        spans = decode_token_scores(
-            probs[:, :, 0],
-            probs[:, :, 1],
-            probs[:, :, 2],
-            self.id_to_class,
-            threshold=thr,
-            flat_ner=self.config.flat_ner,
-            multi_label=self.config.multi_label,
-        )
-        rel_tuples = decode_relations(
-            spans, rel_idx, rel_probs, None, self.rel_id_to_class, threshold=rel_thr
-        )
-        entities = map_spans_to_char(spans, text, starts, ends)
-        relations = format_relations(rel_tuples, spans, text, starts, ends)
-        return entities, relations
-
-    def predict_triples_batch(
-        self,
-        texts: Sequence[str],
-        langs: Optional[Sequence[str]] = None,
-        threshold: Optional[float] = None,
-    ) -> List[Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]]:
-        """Batched triples — one ``session.run`` per length-sorted
-        sub-batch on relex session backends, per-doc otherwise."""
-        n = len(texts)
-        lang_list = list(langs) if langs is not None else ["en"] * n
-        token_mode = self.config.mode == "token"
-        if token_mode:
-            batched = self.is_session_backend and hasattr(
-                self.encoder, "token_relex_outputs"
-            )
-        else:
-            batched = (
-                self.is_session_backend
-                and self.config.scoring != "gazetteer"
-                and getattr(self.encoder, "supports_relations", False)
-            )
-        if not batched:
-            return [
-                self.predict_triples(t, lg or "en", threshold=threshold)
-                for t, lg in zip(texts, lang_list)
-            ]
-        cfg = self.config
-        thr = cfg.threshold if threshold is None else threshold
-        rel_thr = cfg.relation_threshold if cfg.relation_threshold is not None else thr
-        prepared = []
-        for i, (t, lg) in enumerate(zip(texts, lang_list)):
-            if isinstance(t, str) and t.strip():
-                tokens, starts, ends = self._prepare(t, lg or "en")
-                if tokens:
-                    prepared.append((i, tokens, starts, ends))
-        results: List[Tuple[list, list]] = [([], []) for _ in range(n)]
-        order = sorted(range(len(prepared)), key=lambda j: -len(prepared[j][1]))
-        from ..kernel.decoding import decode_token_scores
-
-        for idx_chunk in self._session_chunks(order, prepared):
-            chunk = [prepared[j] for j in idx_chunk]
-            run = (
-                self.encoder.token_relex_outputs
-                if token_mode
-                else self.encoder.relex_outputs
-            )
-            outs = run([c[1] for c in chunk], self.labels, self.relations)
-            for (i, tokens, starts, ends), (probs, rel_idx, rel_probs) in zip(
-                chunk, outs
-            ):
-                text = texts[i]
-                if token_mode:
-                    spans = decode_token_scores(
-                        probs[:, :, 0],
-                        probs[:, :, 1],
-                        probs[:, :, 2],
-                        self.id_to_class,
-                        threshold=thr,
-                        flat_ner=cfg.flat_ner,
-                        multi_label=cfg.multi_label,
-                    )
-                    rel_tuples = decode_relations(
-                        spans, rel_idx, rel_probs, None,
-                        self.rel_id_to_class, threshold=rel_thr,
-                    )
-                    results[i] = (
-                        map_spans_to_char(spans, text, starts, ends),
-                        format_relations(rel_tuples, spans, text, starts, ends),
-                    )
-                    continue
-                probs = self._apply_gazetteer(probs, text, starts, ends)
-                spans = decode_span_probs(
-                    probs,
-                    tokens,
-                    self.id_to_class,
-                    threshold=thr,
-                    flat_ner=cfg.flat_ner,
-                    multi_label=cfg.multi_label,
-                )
-                rel_tuples = decode_relations(
-                    spans, rel_idx, rel_probs, None,
-                    self.rel_id_to_class, threshold=rel_thr,
-                )
-                results[i] = (
-                    map_spans_to_char(spans, text, starts, ends),
-                    format_relations(rel_tuples, spans, text, starts, ends),
-                )
-        return results

@@ -1,15 +1,18 @@
 """Distributed entity/triple extraction operators.
 
-The whole reference model becomes two Arrow-batched ``mapInPandas``
-operators (SURVEY.md §2.10). Dataflow per executor python worker:
+The whole reference model becomes Arrow-batched ``mapInPandas``
+operators (SURVEY.md §2.10) that share one batch loop
+(``_map_batches``). Dataflow per executor python worker:
 
-  Arrow batch (url, text, lang)
+  Arrow batch (url, text[, lang][, spans])
     → pipeline singleton (labels broadcast once; mirrors the
       bi-encoder precompute, gliner/model.py:1627-1656, and the
       executor-singleton ORT session, model.py:682)
-    → per-doc kernel: tokenize → enumerate spans → score → greedy
-      decode → char map                     (gliner/model.py:1333-1381)
-    → exploded rows (one per entity / per triple)
+    → one kernel call per batch (model.pipeline):
+      prepare → score → decode → char map   (gliner/model.py:1333-1381);
+      session backends score length-sorted sub-batches, the
+      deterministic backend one document at a time
+    → the output schema's row formatter: one row per entity / triple
 
 No per-row Python UDFs; no driver-side collect. Output rows carry the
 source ``url`` so downstream joins (eval, linking) are equi-joins.
@@ -30,6 +33,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import re
+from functools import partial
 from typing import Iterator, List, Optional, Sequence
 
 import pandas as pd
@@ -41,6 +45,7 @@ from ..model.pipeline import GLiNERPipeline, PipelineConfig
 ENTITY_SCHEMA = (
     "url string, start int, end int, text string, label string, score double"
 )
+ENTITY_COLUMNS = ["url", "start", "end", "text", "label", "score"]
 TRIPLE_SCHEMA = (
     "url string, "
     "subj_start int, subj_end int, subj_text string, subj_label string, "
@@ -48,6 +53,13 @@ TRIPLE_SCHEMA = (
     "obj_start int, obj_end int, obj_text string, obj_label string, "
     "score double"
 )
+TRIPLE_COLUMNS = [
+    "url",
+    "subj_start", "subj_end", "subj_text", "subj_label",
+    "pred",
+    "obj_start", "obj_end", "obj_text", "obj_label",
+    "score",
+]
 
 _PIPELINE_CACHE: dict = {}
 
@@ -217,6 +229,58 @@ def _get_pipeline(
     return pipe
 
 
+def _map_batches(
+    df: DataFrame, make_pipeline, predict, rows_of, schema: str, columns,
+    url_col: str, text_col: str, lang_col: Optional[str],
+    extra_cols: Sequence[str] = (), min_partitions: Optional[int] = None,
+) -> DataFrame:
+    """The one ``mapInPandas`` batch loop behind every extract operator.
+
+    Per Arrow batch: ``predict(pipe, pdf, texts, langs)`` returns one
+    output per document, in order, and ``rows_of(url, output)`` formats
+    a document's output as rows of ``schema``. The pipeline is built
+    once per worker process (``make_pipeline`` goes through the
+    ``_get_pipeline`` cache).
+    """
+    has_lang = lang_col is not None and lang_col in df.columns
+    cols = [url_col, text_col] + ([lang_col] if has_lang else []) + list(extra_cols)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pipe = make_pipeline()
+        for pdf in batches:
+            langs = list(pdf[lang_col]) if has_lang else ["en"] * len(pdf)
+            outs = predict(pipe, pdf, list(pdf[text_col]), langs)
+            rows = [
+                row for url, out in zip(pdf[url_col], outs) for row in rows_of(url, out)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return _ensure_parallelism(df.select(*cols), min_partitions).mapInPandas(
+        run, schema
+    )
+
+
+def _entity_rows(extra: Optional[str], url, ents) -> List[tuple]:
+    """Row formatter for ENTITY_SCHEMA (+ the ``extra`` column, if any)."""
+    return [
+        (url, e["start"], e["end"], e["text"], e["label"], float(e["score"]))
+        + ((e.get(extra),) if extra else ())
+        for e in ents
+    ]
+
+
+def _triple_rows(url, output) -> List[tuple]:
+    """Row formatter for TRIPLE_SCHEMA."""
+    rows = []
+    for r in output[1]:
+        h, t = r["head"], r["tail"]
+        rows.append((
+            url, h["start"], h["end"], h["text"], h["type"], r["relation"],
+            t["start"], t["end"], t["text"], t["type"], float(r["score"]),
+        ))
+    return rows
+
+
 def extract_entities(
     df: DataFrame,
     labels: Sequence[str],
@@ -259,55 +323,35 @@ def extract_entities(
     labels = list(labels)
     cfg = dict(threshold=threshold, flat_ner=flat_ner, multi_label=multi_label)
     cfg.update(cfg_kwargs)
-    has_lang = lang_col is not None and lang_col in df.columns
-    cols = [url_col, text_col] + ([lang_col] if has_lang else [])
-    if spans_col is not None:
-        cols.append(spans_col)
-    out_cols = ["url", "start", "end", "text", "label", "score"]
+    columns = ENTITY_COLUMNS
     schema = ENTITY_SCHEMA
     if return_class_probs:
-        out_cols.append("class_probs")
+        columns = columns + ["class_probs"]
         schema += ", class_probs map<string,double>"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pipe = _get_pipeline(
+    def predict(pipe, pdf, texts, langs):
+        spans = None
+        if spans_col is not None:
+            spans = [
+                None if sp is None else [(int(s["start"]), int(s["end"])) for s in sp]
+                for sp in pdf[spans_col]
+            ]
+        return pipe.predict_entities_batch(
+            texts, langs, input_spans_list=spans, return_class_probs=return_class_probs
+        )
+
+    return _map_batches(
+        df,
+        lambda: _get_pipeline(
             labels, [], cfg, gazetteer=gazetteer,
             encoder_factory=encoder_factory, encoder_key=encoder_key,
             label_embeddings=label_embeddings,
-        )
-        for pdf in batches:
-            rows: List[tuple] = []
-            langs = list(pdf[lang_col]) if has_lang else ["en"] * len(pdf)
-            span_lists = (
-                [
-                    [(int(s["start"]), int(s["end"])) for s in spans]
-                    if spans is not None
-                    else None
-                    for spans in pdf[spans_col]
-                ]
-                if spans_col is not None
-                else None
-            )
-            urls = list(pdf[url_col])
-            per_doc = pipe.predict_entities_batch(
-                list(pdf[text_col]),
-                langs,
-                input_spans_list=span_lists,
-                return_class_probs=return_class_probs,
-            )
-            for url, ents in zip(urls, per_doc):
-                for e in ents:
-                    row = (
-                        url, e["start"], e["end"], e["text"], e["label"],
-                        float(e["score"]),
-                    )
-                    if return_class_probs:
-                        row = row + (e.get("class_probs"),)
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return _ensure_parallelism(df.select(*cols), min_partitions).mapInPandas(
-        run, schema
+        ),
+        predict,
+        partial(_entity_rows, "class_probs" if return_class_probs else None),
+        schema, columns, url_col, text_col, lang_col,
+        extra_cols=[spans_col] if spans_col is not None else (),
+        min_partitions=min_partitions,
     )
 
 
@@ -348,37 +392,29 @@ def extract_entities_generative(
     gen_constraints = list(gen_constraints) if gen_constraints else None
     cfg = dict(threshold=threshold)
     cfg.update(cfg_kwargs)
-    has_lang = lang_col is not None and lang_col in df.columns
-    cols = [url_col, text_col] + ([lang_col] if has_lang else [])
-    out_cols = [
-        "url", "start", "end", "text", "label", "score", "generated_labels",
-    ]
-    schema = ENTITY_SCHEMA + ", generated_labels array<string>"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pipe = _get_pipeline(labels, [], cfg, gazetteer=gazetteer)
-        for pdf in batches:
-            rows: List[tuple] = []
-            langs = list(pdf[lang_col]) if has_lang else ["en"] * len(pdf)
-            for url, text, lang in zip(pdf[url_col], pdf[text_col], langs):
-                for e in pipe.predict_entities_generative(
-                    text,
-                    lang,
-                    decoder_mode=decoder_mode,
-                    gen_constraints=gen_constraints,
-                    num_gen_sequences=num_gen_sequences,
-                    max_new_tokens=max_new_tokens,
-                ):
-                    rows.append(
-                        (
-                            url, e["start"], e["end"], e["text"], e["label"],
-                            float(e["score"]), e.get("generated_labels"),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=out_cols)
+    def predict(pipe, pdf, texts, langs):
+        return [
+            pipe.predict_entities_generative(
+                text,
+                lang,
+                decoder_mode=decoder_mode,
+                gen_constraints=gen_constraints,
+                num_gen_sequences=num_gen_sequences,
+                max_new_tokens=max_new_tokens,
+            )
+            for text, lang in zip(texts, langs)
+        ]
 
-    return _ensure_parallelism(df.select(*cols), min_partitions).mapInPandas(
-        run, schema
+    return _map_batches(
+        df,
+        lambda: _get_pipeline(labels, [], cfg, gazetteer=gazetteer),
+        predict,
+        partial(_entity_rows, "generated_labels"),
+        ENTITY_SCHEMA + ", generated_labels array<string>",
+        ENTITY_COLUMNS + ["generated_labels"],
+        url_col, text_col, lang_col,
+        min_partitions=min_partitions,
     )
 
 
@@ -410,6 +446,7 @@ def extract_triples(
     """
     labels = list(labels)
     relations = list(relations)
+    patterns = [tuple(p) for p in (patterns or [])]
     cfg = dict(
         threshold=threshold,
         adjacency_threshold=adjacency_threshold,
@@ -417,42 +454,14 @@ def extract_triples(
         flat_ner=flat_ner,
     )
     cfg.update(cfg_kwargs)
-    has_lang = lang_col is not None and lang_col in df.columns
-    cols = [url_col, text_col] + ([lang_col] if has_lang else [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pipe = _get_pipeline(
-            labels, relations, cfg,
-            gazetteer=gazetteer, patterns=[tuple(p) for p in (patterns or [])],
+    return _map_batches(
+        df,
+        lambda: _get_pipeline(
+            labels, relations, cfg, gazetteer=gazetteer, patterns=patterns,
             encoder_factory=encoder_factory, encoder_key=encoder_key,
-        )
-        for pdf in batches:
-            rows: List[tuple] = []
-            langs = list(pdf[lang_col]) if has_lang else ["en"] * len(pdf)
-            per_doc = pipe.predict_triples_batch(list(pdf[text_col]), langs)
-            for url, (_ents, rels) in zip(pdf[url_col], per_doc):
-                for r in rels:
-                    h, t = r["head"], r["tail"]
-                    rows.append(
-                        (
-                            url,
-                            h["start"], h["end"], h["text"], h["type"],
-                            r["relation"],
-                            t["start"], t["end"], t["text"], t["type"],
-                            float(r["score"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url",
-                    "subj_start", "subj_end", "subj_text", "subj_label",
-                    "pred",
-                    "obj_start", "obj_end", "obj_text", "obj_label",
-                    "score",
-                ],
-            )
-
-    return _ensure_parallelism(df.select(*cols), min_partitions).mapInPandas(
-        run, TRIPLE_SCHEMA
+        ),
+        lambda pipe, pdf, texts, langs: pipe.predict_triples_batch(texts, langs),
+        _triple_rows,
+        TRIPLE_SCHEMA, TRIPLE_COLUMNS, url_col, text_col, lang_col,
+        min_partitions=min_partitions,
     )

@@ -59,12 +59,6 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    # Opt-in worker-daemon preload (see plans/daemon.py for the A/B:
-    # neutral on this host because Spark 4's stock daemon already
-    # preloads numpy/pyarrow/serializers; wins where worker.reuse is
-    # off or imports are I/O-bound).
-    if os.environ.get("SPARK_GRAFT_PRELOAD_DAEMON", "") == "1":
-        b = b.config("spark.python.daemon.module", "gliner_spark.plans.daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
